@@ -35,26 +35,6 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def shingles_from_tokens(toks, k: int = 3):
-    """Array of word k-grams from a tokens column, [] when fewer than k.
-
-    slice+array_join (one array access per gram) instead of k element_at
-    calls, and callers pre-project the tokens column so the split() is
-    evaluated once per row, not once per gram — measured 3× cheaper.
-    Stays inside whole-stage codegen either way."""
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(0)))
-    gram = lambda i: F.array_join(F.slice(toks, i, k), " ")  # noqa: E731
-    return F.when(n >= k, F.transform(idx, gram)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def word_shingles(text_col: str, k: int = 3):
-    """Convenience wrapper: shingles straight from a text column."""
-    return shingles_from_tokens(F.split(F.col(text_col), " "), k)
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -78,19 +58,18 @@ def ngram_jaccard_pairs(
     self-equi-join on shingle → groupBy pair) emitted one JVM row per
     (pair, shared shingle) — ~113M rows at SF=1 through an Exchange and a
     130M-group hash aggregate, 225 s of the driver suite. Here the
-    distinct-shingle sets are integer-coded once (dictionary join against
-    the distinct-shingle vocabulary), docs are hashed into ⌈n/block⌉
-    blocks, and every block PAIR is one task that counts intersections
-    with numpy (sort + searchsorted + unique — C speed, no per-row JVM
-    overhead). The kernel emits exact integer (n_shared, n_a, n_b)
+    distinct-shingle sets come straight from the Arrow shingler as strings,
+    docs are hashed into ⌈n/block⌉ blocks, and every block PAIR is one task
+    that integer-codes its two payloads (pd.factorize) and counts
+    intersections with numpy (sort + searchsorted + unique — C speed, no
+    per-row JVM overhead). The kernel emits exact integer (n_shared, n_a, n_b)
     triples for a conservatively prefiltered candidate set, and the final
     jaccard division/round/threshold runs in the SAME Spark expression as
     before — so results are bit-identical (integers are exact; no float
     crosses the Python boundary). Work and shuffle volume are both
     quadratic in blocks — the honest cost of an exhaustive audit — but at
     memory bandwidth rather than shuffle machinery speed (measured 225 s
-    → ~8 s at SF=1). The vocabulary dictionary is corpus-sized at true
-    web scale, which is one more reason this op stays the AUDIT path
+    → ~8 s at SF=1), which is why this op stays the AUDIT path
     (lsh_verified_near_duplicates is the 100-TB path).
     """
     from pyspark import StorageLevel
@@ -306,49 +285,6 @@ def auto_minhash_rows_per_band(
     )
 
 
-def _affine_minhash(sh, num_hashes: int):
-    """num_hashes MinHash values over a shingle array via the affine family
-    g_i = (h1 + i·h2) mod p (Carter–Wegman 2-universal construction): ONE
-    md5 per shingle (split into two 32-bit halves) instead of num_hashes
-    md5s — measured ~2× cheaper at 16 hashes. h1,h2 < 2^32 keep
-    h1 + i·h2 < 2^32·(i+2), exact in int64 for any num_hashes below ~2^30
-    (adaptive banding reaches i≈40 at planetary corpus sizes — nowhere
-    near the bound), and reproducible bit-for-bit in any engine (the
-    DuckDB oracle runs the identical expression)."""
-    digests = F.transform(sh, F.md5)  # one md5 per shingle
-    halves = F.transform(
-        digests,
-        lambda d: F.struct(
-            F.conv(F.substring(d, 1, 8), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(d, 9, 8), 16, 10).cast("long").alias("h2"),
-        ),
-    )
-    # ONE fold over the shingles, all num_hashes minima carried in the
-    # accumulator array (zip_with + least), instead of num_hashes separate
-    # array_min(transform(...)) passes each materializing an intermediate
-    # array — same values, measured ~2× cheaper at 16 hashes. The init
-    # sentinel p is ≥ every pmod result, so it never survives a non-empty
-    # fold; callers filter size(sh) > 0 (empty docs have no signature).
-    init = F.array(*[F.lit(MINHASH_PRIME).cast("long")] * num_hashes)
-    probes = lambda h: F.array(  # noqa: E731
-        *[
-            F.pmod(h["h1"] + F.lit(i) * h["h2"], F.lit(MINHASH_PRIME))
-            for i in range(num_hashes)
-        ]
-    )
-    return F.aggregate(
-        halves,
-        init,
-        lambda acc, h: F.zip_with(acc, probes(h), lambda x, y: F.least(x, y)),
-    )
-
-
-def minhash_signature(text_col: str, k: int = 3, num_hashes: int = 16):
-    """num_hashes-wide MinHash signature over word-k-gram shingles
-    (array<bigint>; see _affine_minhash for the hash family)."""
-    return _affine_minhash(word_shingles(text_col, k), num_hashes)
-
-
 def _shingle_arrays(
     docs: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
@@ -441,7 +377,7 @@ def _banded_keys(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     expression form: h1,h2 < 2^32 so h1 + i·h2 < 2^36 is exact in int64,
     numpy's % on positives equals pmod, str(int) equals the JVM
     long→string cast, and hashlib md5 hex equals Spark's md5 — pinned by
-    tests against _affine_minhash and the unchanged DuckDB twins."""
+    the unchanged DuckDB twins (the same affine expression in SQL)."""
     if num_hashes % bands:
         # trailing signature components would be silently ignored, weakening
         # recall and desyncing from any oracle built over all hashes
@@ -618,7 +554,7 @@ def cross_doc_spans(
     collisions (2^-128) are the declared approximation, exactly as in the
     MinHash family.
 
-    Tokenization matches word_shingles (split on single space, case
+    Tokenization matches _shingle_arrays (split on single space, case
     preserved). Docs shorter than n tokens have no grams and report
     coverage 0. Returns one row per input doc:
     (doc_id, n_tokens, dup_tokens, dup_fraction)."""

@@ -1,35 +1,122 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — exact, JVM-side arithmetic via
-zip_with/aggregate (no Python in the hot path). Scale path: LSH-bucketed
-(random-hyperplane signatures) candidate generation so a 1000-executor
-cluster never materializes the full cross product; plus embedding-cosine
-near-duplicate detection for corpus curation.
+Exact cosine top-k (brute_force_topk), IVF approximate top-k over k-means
+cells (ivf_topk, and ivf_topk_indexed over a persisted cid-partitioned
+index), banded-LSH embedding near-duplicate pairs
+(embedding_near_duplicates) and SemDeDup-style semantic dedup
+(semantic_dedup).
+
+Each similarity primitive has ONE arithmetic path, an Arrow kernel that
+crosses the Python boundary once per batch:
+
+- cosine (_cosine): dot product and both norms are sequential
+  left-to-right sums (np.cumsum), the IEEE operation order of the JVM's
+  aggregate fold and of the DuckDB twins' list_reduce, so the doubles are
+  bit-identical; the division and the 6dp round run in Spark;
+- cell assignment (_assign_cells, _probe_pairs): 6dp-rounded squared L2
+  to every centroid (_cell_distances), argmin / stable argsort so ties go
+  to the lowest cid.
+
+Degenerate vectors never raise: a null, empty, wrong-length or zero-norm
+vector has a null cosine against everything (so it never passes a
+threshold and ranks after every scored neighbor), and a vector that cannot
+be measured against the centroids gets no cell.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..caching import register_persisted
+from .partitioning import widen_for_kernel
+
+# rows per score tile of semantic_dedup's per-cell kernel: a task's scratch
+# is a few _CELL_TILE² double tiles (0.5 MB each) whatever the cell size
+_CELL_TILE = 256
 
 
-def cosine_expr(a, b):
-    """cosine(a, b) as a column expression (double), sequential-order
-    arithmetic so external oracles reproduce it exactly."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _lengths(vecs: np.ndarray) -> np.ndarray:
+    """Element count of each vector in an object array; -1 for null."""
+    return np.fromiter(
+        (-1 if v is None else len(v) for v in vecs), np.int64, len(vecs)
     )
-    na = F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
+
+
+def _stack(vecs: np.ndarray, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(positions, float64 matrix) of the vectors holding exactly dim
+    elements; null, empty and wrong-length vectors are left out."""
+    rows = np.flatnonzero(_lengths(vecs) == dim)
+    if not len(rows):
+        return rows, np.empty((0, dim))
+    return rows, np.stack(vecs[rows]).astype(np.float64)
+
+
+def _fold_sum(P: np.ndarray) -> np.ndarray:
+    """Row sums of P in sequential left-to-right order, i.e. the fold
+    0.0 + p0 + p1 + ... (np.cumsum is sequential; the trailing + 0.0 turns
+    the -0.0 a sum of only -0.0 terms leaves into the fold's +0.0)."""
+    return np.cumsum(P, axis=1)[:, -1] + 0.0
+
+
+def _cosine_parts(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(3, n) array of dot(a_i, b_i), |a_i|, |b_i| for two object arrays of
+    vectors. Unscorable pairs — a null or empty side, sides of different
+    lengths, or a zero norm product — are NaN in all three, which reaches
+    Spark as null (so the Spark-side division never sees a zero divisor)."""
+    out = np.full((3, len(a)), np.nan)
+    la, lb = _lengths(a), _lengths(b)
+    ok = (la == lb) & (la > 0)
+    for d in np.unique(la[ok]):
+        rows = np.flatnonzero(ok & (la == d))
+        A = np.stack(a[rows]).astype(np.float64)
+        B = np.stack(b[rows]).astype(np.float64)
+        out[0, rows] = _fold_sum(A * B)
+        out[1, rows] = np.sqrt(_fold_sum(A * A))
+        out[2, rows] = np.sqrt(_fold_sum(B * B))
+    out[:, out[1] * out[2] == 0] = np.nan
+    return out
+
+
+def _cosine(pairs: DataFrame, left: str, right: str, keys: list[str]) -> DataFrame:
+    """(keys..., score): score = round(cos(left, right), 6) per row of
+    pairs, null when unscorable. The Arrow kernel returns the exact
+    sequential-fold dot and norms (_cosine_parts); the division and the
+    6dp round stay one Spark expression."""
+    types = dict(pairs.dtypes)
+
+    def score_rows(batches):
+        for pdf in batches:
+            dot, na, nb = _cosine_parts(pdf[left].to_numpy(), pdf[right].to_numpy())
+            yield pdf[keys].assign(dot=dot, na=na, nb=nb)
+
+    schema = ", ".join(f"{c} {types[c]}" for c in keys)
+    return (
+        pairs.select(*keys, left, right)
+        .mapInPandas(score_rows, f"{schema}, dot double, na double, nb double")
+        .select(
+            *keys,
+            F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6).alias("score"),
+        )
     )
-    nb = F.sqrt(
-        F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
+
+
+def _score_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id, score): the k best of each query's
+    candidate (query_id, qvec, neighbor_id, nvec) pairs by exact cosine,
+    ranked (score desc, neighbor_id asc) for run-to-run determinism; null
+    scores rank last."""
+    scored = _cosine(pairs, "qvec", "nvec", ["query_id", "neighbor_id"])
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "score")
     )
-    return dot / (na * nb)
 
 
 def brute_force_topk(
@@ -42,126 +129,20 @@ def brute_force_topk(
     """Exact top-k neighbors for each query vector.
 
     queries is small (broadcast) → the join is a map-side nested loop over
-    the corpus scan; per-group top-k via window (rank ties broken by
-    neighbor id for run-to-run determinism). Score rounded to 6dp so
-    cross-engine fp noise can't flip equality checks.
-
-    The dot/norm arithmetic runs in an Arrow kernel (round 8): np.cumsum
-    accumulates left-to-right in the same IEEE order as the JVM
-    sequential fold (and the twin's list_reduce), so the doubles are
-    bit-identical while the per-pair interpreted higher-order functions
-    (the dominant cost — 200k pairs × 3 folds at SF=1) disappear; the
-    division and 6dp round stay in the same Spark expression as before."""
-    import numpy as np
-    import pandas as pd
-
+    the corpus scan, scored by the cosine kernel and cut by a per-query
+    top-k window. Score rounded to 6dp so cross-engine fp noise can't flip
+    equality checks."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    from .partitioning import widen_for_kernel
-
     c = widen_for_kernel(
         embeddings.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
         )
     )
-    id_t = dict(embeddings.dtypes)[id_col]
-    qid_t = dict(queries.dtypes)[id_col]
-
-    def score_rows(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack([np.asarray(v, np.float64) for v in pdf["qvec"]])
-            Nv = np.stack([np.asarray(v, np.float64) for v in pdf["nvec"]])
-            dot = np.cumsum(Q * Nv, axis=1)[:, -1]
-            na = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])
-            nb = np.sqrt(np.cumsum(Nv * Nv, axis=1)[:, -1])
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "neighbor_id": pdf["neighbor_id"],
-                    "dot": dot,
-                    "na": na,
-                    "nb": nb,
-                }
-            )
-
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .mapInPandas(
-            score_rows,
-            schema=(
-                f"query_id {qid_t}, neighbor_id {id_t}, "
-                "dot double, na double, nb double"
-            ),
-        )
-        .withColumn(
-            "score", F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6)
-        )
-        .select("query_id", "neighbor_id", "score")
+    return _score_topk(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
-
-
-def _dot(a, b):
-    """Sequential-fold dot product (same arithmetic order as the DuckDB
-    oracle's list_reduce, so sign tests can never diverge cross-engine)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def hyperplane_signature(vec_col, planes_col, n_bits: int):
-    """Random-hyperplane LSH signature from a planes ARRAY COLUMN
-    (array<array<double>>, length n_bits): bit i = sign(v · planes[i]),
-    packed into a long (weight 2^i).
-
-    The planes reach the plan as DATA (a one-row broadcast DataFrame
-    cross-joined in — see plane_matrix_frame), not as inlined literals: a
-    768-d × 20-bit production config would otherwise bake ~15k float
-    literals into every task's serialized plan and codegen (VERDICT r3
-    what's-wrong #3). All arithmetic stays in the JVM: sequential-fold dots
-    + exact power-of-two bit sums, bit-identical to the literal form it
-    replaced (plan-size test + unchanged oracle hashes)."""
-    idx = F.sequence(F.lit(1), F.lit(n_bits))
-    bit = lambda i: F.when(  # noqa: E731
-        _dot(F.col(vec_col) if isinstance(vec_col, str) else vec_col,
-             F.element_at(planes_col, i)) >= 0,
-        # 2^(i-1) as a long — exact for any realistic bit width (< 2^52);
-        # shiftleft() can't take a column shift amount
-        F.pow(F.lit(2.0), (i - F.lit(1)).cast("double")).cast("long"),
-    ).otherwise(F.lit(0).cast("long"))
-    return F.aggregate(
-        F.transform(idx, bit), F.lit(0).cast("long"), lambda acc, v: acc + v
-    )
-
-
-def plane_matrix_frame(spark, nested: list):
-    """One-row DataFrame carrying a (possibly nested) plane matrix as data.
-    Cross-joining its broadcast (1 row) attaches the matrix to every row at
-    zero shuffle cost while keeping the physical plan O(1)-sized."""
-    from pyspark.sql.types import StructType
-
-    depth = 0
-    probe = nested
-    while isinstance(probe, list):
-        depth += 1
-        probe = probe[0]
-    typ = "double"
-    for _ in range(depth):
-        typ = f"array<{typ}>"
-    schema = StructType.fromDDL(f"__planes {typ}")
-    return spark.createDataFrame([(nested,)], schema)
 
 
 def make_planes(dim: int, n_bits: int, seed: int = 42) -> list[list[float]]:
@@ -169,46 +150,6 @@ def make_planes(dim: int, n_bits: int, seed: int = 42) -> list[list[float]]:
 
     rng = random.Random(f"planes:{seed}")
     return [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_bits)]
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    dim: int = 64,
-    n_bits: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: bucket corpus + queries by hyperplane signature,
-    rank only within matching buckets. At 100 TB this replaces the full
-    scan-per-query with a shuffle on the (small-cardinality) bucket key;
-    recall is tuned by n_bits / multi-probe."""
-    planes = make_planes(dim, n_bits, seed)
-    pf = plane_matrix_frame(embeddings.sparkSession, planes)
-    c = embeddings.crossJoin(F.broadcast(pf)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("nvec"),
-        hyperplane_signature(vec_col, F.col("__planes"), n_bits).alias("bucket"),
-    )
-    q = queries.crossJoin(F.broadcast(pf)).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        hyperplane_signature(vec_col, F.col("__planes"), n_bits).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_expr(F.col("qvec"), F.col("nvec")), 6))
-        .select("query_id", "neighbor_id", "score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
 
 
 def auto_signature_bits(
@@ -284,6 +225,9 @@ def embedding_near_duplicates(
     trade recall for candidate discipline; at true web scale the recall
     curve is the argument for graduating to IVF/multi-probe, which this
     banded layout is the on-ramp for.
+
+    Vectors that do not hold exactly dim elements get no signature; a
+    zero-norm vector is signed but its cosine is null, so it never pairs.
     """
     if bits_per_table is None:
         # n_rows from the caller (or table stats) avoids an extra full-scan
@@ -293,17 +237,10 @@ def embedding_near_duplicates(
             n_rows = _estimated_rows(embeddings)
         bits_per_table = auto_signature_bits(n_rows)
     by_table = near_duplicate_planes(dim, n_tables, bits_per_table, seed)
-    # Arrow-vectorized signature kernel (round 8): the expression form
-    # (n_tables × bits_per_table sequential-fold dots per vector through
-    # interpreted higher-order functions) measured ~6 s of the 9 s query at
-    # SF=1. numpy reproduces the EXACT fold arithmetic: np.cumsum is a
-    # sequential left-to-right accumulation, so cumsum(products)[-1] is
-    # bit-identical to the JVM aggregate fold (same IEEE ops, same order),
-    # the sign test and power-of-two bit packing are exact integers, and
-    # the norm is the same sqrt of a sequential sum of squares. Values are
-    # pinned by the unchanged DuckDB twin (plane fixtures + list_reduce).
-    import numpy as np
-
+    # signature dots: np.cumsum is the twin's sequential list_reduce fold
+    # (same IEEE ops, same order), and the sign test and power-of-two bit
+    # packing are exact integers, so the buckets match the DuckDB twin's
+    # (plane fixtures + list_reduce) bit for bit
     nested = [[p for tt, _, p in by_table if tt == t] for t in range(n_tables)]
     P = np.asarray(nested, dtype=np.float64)  # (tables, bits, dim)
     id_t = dict(embeddings.dtypes)[id_col]
@@ -311,14 +248,9 @@ def embedding_near_duplicates(
     weights = (np.int64(1) << np.arange(bits_per_table, dtype=np.int64))
 
     def sig_rows(batches):
-        import pandas as pd
-
         for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = pdf[vec_col]
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-            nrm = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
+            vecs = pdf[vec_col].to_numpy()
+            rows, X = _stack(vecs, dim)
             for t in range(n_tables):
                 # sequential-order dots: cumsum along dim == the JVM fold
                 dots = np.cumsum(X[:, None, :] * P[t][None, :, :], axis=2)[
@@ -327,19 +259,15 @@ def embedding_near_duplicates(
                 sig = ((dots >= 0) * weights[None, :]).sum(axis=1)
                 yield pd.DataFrame(
                     {
-                        "id": pdf[id_col],
-                        "vec": vecs,
-                        "nrm": nrm,
-                        "tbl": np.full(len(pdf), t, dtype=np.int32),
+                        "id": pdf[id_col].to_numpy()[rows],
+                        "vec": vecs[rows],
+                        "tbl": np.full(len(rows), t, dtype=np.int32),
                         "sig": sig.astype(np.int64),
                     }
                 )
 
-    from .partitioning import widen_for_kernel
-
     sig = widen_for_kernel(embeddings.select(id_col, vec_col)).mapInPandas(
-        sig_rows,
-        schema=f"id {id_t}, vec {vec_t}, nrm double, tbl int, sig long",
+        sig_rows, schema=f"id {id_t}, vec {vec_t}, tbl int, sig long"
     )
     if max_bucket_size is not None:
         w = Window.partitionBy("tbl", "sig")
@@ -348,25 +276,21 @@ def embedding_near_duplicates(
         ).drop("_n")
     # materialize before the self-join: both sides otherwise recompute the
     # n_tables × bits_per_table signature dots over the full corpus
-    from pyspark import StorageLevel
-
     sig = register_persisted(sig.persist(StorageLevel.MEMORY_AND_DISK))
     a, b = sig.alias("a"), sig.alias("b")
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("a.vec"),
-            F.col("b.vec"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (
+    pairs = (
         a.join(b, ["tbl", "sig"])
         .filter(F.col("a.id") < F.col("b.id"))
-        .withColumn("score", F.round(dot / (F.col("a.nrm") * F.col("b.nrm")), 6))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.col("a.vec").alias("vec_a"),
+            F.col("b.vec").alias("vec_b"),
+        )
+    )
+    return (
+        _cosine(pairs, "vec_a", "vec_b", ["id_a", "id_b"])
         .filter(F.col("score") >= threshold)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "score")
         .distinct()
     )
 
@@ -377,13 +301,12 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pairwise: str = "fold",
     max_cell_size: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition the corpus by a k-means coarse quantizer
     (the SAME deterministic trainer/assignment kernel IVF uses —
-    ivf_train_centroids / _cell_distances), then compare pairs ONLY within
+    ivf_train_centroids / _assign_cells), then compare pairs ONLY within
     a cell, so total pairwise work is sum(|cell|²) ≈ n^1.5 at the √n nlist
     sizing rule instead of n² — the property that makes semantic dedup
     runnable on a 100-TB embedding table. The cell id is the shuffle key;
@@ -401,25 +324,20 @@ def semantic_dedup(
     Returns the DROPPED rows: (id, cid, dup_of, score) where dup_of is the
     strongest dominating near-duplicate (score DESC, id ASC). Zero-norm
     vectors are undefined under cosine and yield null scores (never pass
-    the threshold) — same in any IEEE SQL engine.
+    the threshold); vectors that do not match the centroid width get no
+    cell.
 
-    pairwise selects the within-cell kernel: "fold" (default) scores each
-    candidate pair with the JVM sequential-fold cosine — whole-stage
-    codegen, zero Python, and the exact arithmetic order the generated
-    DuckDB twin states, so it is the oracle-parity path; "arrow" runs one
-    normalized numpy matmul per cell via applyInPandas — the big-corpus
-    path (a cell of p rows costs one p×p GEMM instead of p² interpreted
-    array folds; measured order-of-magnitude faster at 100k+ cells of
-    √n population). Both round to 6dp before the threshold and election,
-    and tests assert row-identical output on the real corpora; matmul
-    re-association vs sequential fold can differ near the last ulp of a
-    rounding edge, so the twin-checked driver query stays on "fold".
+    One applyInPandas task per cell computes every pair's cosine with the
+    sequential fold's own arithmetic: S += outer(X[:, d], X[:, d]) for d in
+    order, over fixed _CELL_TILE-row tiles, so the scores equal the DuckDB
+    twin's list_reduce bit for bit and a task's scratch does not grow with
+    the cell. The 6dp round, threshold and keeper election run in Spark.
 
-    max_cell_size (arrow path only): hot-cell skew guard — cells above the
-    bound are split into deterministic id-hash sub-buckets before the
-    per-cell GEMM, bounding one task's memory at max_cell_size² instead of
-    (collapsed cell)²; near-dup pairs across sub-buckets of an over-full
-    cell are the declared recall trade (None = exact).
+    max_cell_size: hot-cell skew guard — cells above the bound are split
+    into deterministic id-hash sub-buckets before the per-cell kernel,
+    bounding one task's input at max_cell_size rows instead of the
+    collapsed cell; near-dup pairs across sub-buckets of an over-full cell
+    are the declared recall trade (None = exact).
 
     Reference analog: none (the reference pipeline has no embedding ops);
     beyond-§2 LLM-pipeline family per SURVEY.md, next to
@@ -427,159 +345,111 @@ def semantic_dedup(
     the curation-policy variant: partition-exhaustive within cells, with an
     explicit keep/drop election rather than a pair list.
     """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark import StorageLevel
-
-    if pairwise not in ("fold", "arrow"):
-        raise ValueError(f"pairwise must be 'fold' or 'arrow', got {pairwise!r}")
     id_t = dict(embeddings.dtypes)[id_col]
-    vec_t = dict(embeddings.dtypes)[vec_col]
-    C = [[float(v) for v in c] for c in centroids]
+    C = np.asarray(centroids, dtype=np.float64)
+    # the same sequential Python sum the twin's centroid literals use
+    cnrm = np.array([np.sqrt(sum(v * v for v in c)) for c in C.tolist()])
+    # prefilter on the raw cosine: round(x, 6) >= threshold needs
+    # x >= threshold - 5e-7, so this margin never drops a qualifying pair
+    floor = threshold - 1e-6
 
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf):
-                X = np.stack(pdf[vec_col].to_numpy())
-                cid = _cell_distances(X, C).argmin(axis=1).astype("int32")
-            else:
-                cid = pd.Series([], dtype="int32")
-            yield pd.DataFrame(
-                {"id": pdf[id_col], "cid": cid, "vec": pdf[vec_col]}
+    def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("id", kind="stable")
+        ids = pdf["id"].to_numpy()
+        cid = int(pdf["cid"].iat[0])
+        X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+        XT = np.ascontiguousarray(X.T)
+        nrm = np.sqrt(_fold_sum(X * X))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cs = _fold_sum(X * C[cid]) / (nrm * cnrm[cid])
+        out = []
+        p = len(ids)
+        # ids ascending: every (lower id, higher id) pair lies in a tile
+        # at or right of the diagonal
+        for r0 in range(0, p, _CELL_TILE):
+            r = slice(r0, min(r0 + _CELL_TILE, p))
+            for c0 in range(r0, p, _CELL_TILE):
+                c = slice(c0, min(c0 + _CELL_TILE, p))
+                S = np.zeros((r.stop - r.start, c.stop - c.start))
+                tmp = np.empty_like(S)
+                for d in range(len(XT)):
+                    np.multiply.outer(XT[d, r], XT[d, c], out=tmp)
+                    S += tmp
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = S / np.multiply.outer(nrm[r], nrm[c])
+                i, j = np.nonzero(
+                    (cos >= floor) & (ids[r][:, None] < ids[c][None, :])
+                )
+                if len(i):
+                    i0, j0 = i + r0, j + c0
+                    out.append(
+                        pd.DataFrame(
+                            {"ida": ids[i0], "idb": ids[j0], "csa": cs[i0],
+                             "csb": cs[j0], "cos": cos[i, j]}
+                        )
+                    )
+        if not out:
+            return pd.DataFrame(
+                {"cid": pd.Series([], dtype="int32"), "ida": ids[:0],
+                 "idb": ids[:0], "csa": [], "csb": [], "cos": []}
             )
+        return pd.concat(out, ignore_index=True).assign(cid=cid)
 
-    from .partitioning import widen_for_kernel
-
-    sig = widen_for_kernel(embeddings.select(id_col, vec_col)).mapInPandas(
-        assign, schema=f"id {id_t}, cid int, vec {vec_t}"
+    cells = _assign_cells(
+        widen_for_kernel(
+            embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+        ),
+        centroids,
+        "vec",
     )
-    # centroid table is nlist(≈√n)-rows — broadcast; cent_sim and the row
-    # norm are computed ONCE per row (JVM fold), before the self-join that
-    # would otherwise re-derive them per candidate pair
-    spark = embeddings.sparkSession
-    cents_df = spark.createDataFrame(
-        [(i, c, float(np.sqrt(sum(v * v for v in c)))) for i, c in enumerate(C)],
-        "cid int, c array<double>, cnrm double",
-    )
-    nrm = F.sqrt(
-        F.aggregate(
-            F.col("vec"), F.lit(0.0), lambda a, v: a + v.cast("double") * v.cast("double")
-        )
-    )
-    dot_c = F.aggregate(
-        F.zip_with(F.col("vec"), F.col("c"), lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    sig = (
-        sig.join(F.broadcast(cents_df), "cid")
-        .withColumn("nrm", nrm)
-        .withColumn("cent_sim", F.round(dot_c / (F.col("nrm") * F.col("cnrm")), 6))
-        .select("id", "cid", "vec", "nrm", "cent_sim")
-    )
-    if pairwise == "arrow":
-        # hot-cell guard (round-8 verdict item): one applyInPandas task
-        # materializes an entire cell and runs a p×p GEMM — the √n-sizing
-        # argument assumes balanced cells, but real embedding corpora
-        # cluster, and a collapsed cell (p ≈ n) is quadratic memory in one
-        # executor. Cells above max_cell_size are split into
+    group_keys = ["cid"]
+    if max_cell_size is not None:
+        # hot-cell guard: one applyInPandas task materializes an entire
+        # cell — the √n-sizing argument assumes balanced cells, but real
+        # embedding corpora cluster, and a collapsed cell (p ≈ n) lands in
+        # one executor. Cells above max_cell_size are split into
         # ceil(p/max_cell_size) sub-buckets by a deterministic id hash
         # (mirroring embedding_near_duplicates' bucket-size cap); pairs
-        # across sub-buckets of the same cell are the declared recall
-        # trade. None (default) = exact, the oracle-parity configuration.
-        group_keys = ["cid"]
-        if max_cell_size is not None:
-            cw = Window.partitionBy("cid")
-            sig = (
-                sig.withColumn("_p", F.count(F.lit(1)).over(cw))
-                .withColumn(
-                    "_sub",
-                    F.when(
-                        F.col("_p") > max_cell_size,
-                        F.pmod(
-                            F.xxhash64(F.col("id").cast("string")),
-                            F.ceil(F.col("_p") / F.lit(max_cell_size)).cast(
-                                "long"
-                            ),
-                        ).cast("int"),
-                    ).otherwise(F.lit(0)),
-                )
-                .drop("_p")
+        # across sub-buckets of the same cell are the declared recall trade.
+        cw = Window.partitionBy("cid")
+        cells = (
+            cells.withColumn("_p", F.count(F.lit(1)).over(cw))
+            .withColumn(
+                "_sub",
+                F.when(
+                    F.col("_p") > max_cell_size,
+                    F.pmod(
+                        F.xxhash64(F.col("id").cast("string")),
+                        F.ceil(F.col("_p") / F.lit(max_cell_size)).cast("long"),
+                    ).cast("int"),
+                ).otherwise(F.lit(0)),
             )
-            group_keys = ["cid", "_sub"]
-        out_schema = f"id {id_t}, cid int, dup_of {id_t}, score double"
-
-        def cell_drops(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) < 2:
-                return pd.DataFrame(
-                    {"id": pdf["id"][:0], "cid": pdf["cid"][:0],
-                     "dup_of": pdf["id"][:0], "score": pd.Series([], dtype="float64")}
-                )
-            X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
-            nrm = pdf["nrm"].to_numpy()
-            cs = pdf["cent_sim"].to_numpy()
-            ids = pdf["id"].to_numpy()
-            S = np.round((X @ X.T) / np.outer(nrm, nrm), 6)
-            # dominance: score>=θ AND (cs_j < cs_i OR (cs_j == cs_i AND id_j < id_i))
-            dom = (S >= threshold) & (
-                (cs[None, :] < cs[:, None])
-                | ((cs[None, :] == cs[:, None]) & (ids[None, :] < ids[:, None]))
-            )
-            np.fill_diagonal(dom, False)
-            Sm = np.where(dom, S, -np.inf)
-            best = Sm.max(axis=1)
-            rows = np.flatnonzero(best > -np.inf)
-            dup_of, score = [], []
-            for i in rows:
-                ties = np.flatnonzero(Sm[i] == best[i])
-                j = ties[np.argmin(ids[ties])]
-                dup_of.append(ids[j])
-                score.append(S[i, j])
-            return pd.DataFrame(
-                {"id": ids[rows], "cid": pdf["cid"].iloc[0],
-                 "dup_of": dup_of, "score": score}
-            )
-
-        return sig.groupBy(*group_keys).applyInPandas(
-            cell_drops, schema=out_schema
+            .drop("_p")
         )
-    # pre-cast the vector to double ONCE per row (identical values to the
-    # old per-pair element casts) so the pair fold below runs over doubles
-    sig = sig.withColumn("vec", F.col("vec").cast("array<double>"))
-    sig = register_persisted(sig.persist(StorageLevel.MEMORY_AND_DISK))
-    a, b = sig.alias("a"), sig.alias("b")
-    pair_dot = F.aggregate(
-        F.zip_with(
-            F.col("a.vec"), F.col("b.vec"),
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    # score each UNORDERED pair once (a.id < b.id) — the dot/norm/round are
-    # symmetric, so this halves the interpreted fold work vs the old
-    # a.id != b.id self-join — then decide dominance in both directions:
-    # with a.id < b.id, "b dominates a" reduces to b.cent_sim < a.cent_sim,
-    # and "a dominates b" to a.cent_sim <= b.cent_sim (the id tie-break
-    # always favors the lower id). Identical pair set and scores.
+        group_keys = ["cid", "_sub"]
     pairs = (
-        a.join(b, "cid")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .withColumn("score", F.round(pair_dot / (F.col("a.nrm") * F.col("b.nrm")), 6))
-        .filter(F.col("score") >= threshold)
+        cells.groupBy(*group_keys)
+        .applyInPandas(
+            cell_pairs,
+            schema=(
+                f"cid int, ida {id_t}, idb {id_t}, "
+                "csa double, csb double, cos double"
+            ),
+        )
         .select(
             "cid",
-            F.col("a.id").alias("ida"),
-            F.col("b.id").alias("idb"),
-            F.col("a.cent_sim").alias("csa"),
-            F.col("b.cent_sim").alias("csb"),
-            "score",
+            "ida",
+            "idb",
+            F.round("csa", 6).alias("csa"),
+            F.round("csb", 6).alias("csb"),
+            F.round("cos", 6).alias("score"),
         )
+        .filter(F.col("score") >= threshold)
     )
-    # exactly one member of a qualifying pair dominates the other, so this
-    # is a projection, not a union: b dominates a iff csb < csa; otherwise
-    # (csa < csb, or the tie, which favors the lower id) a dominates b
+    # each qualifying pair (ida < idb) has exactly one dominated member, so
+    # this is a projection, not a union: b dominates a iff csb < csa;
+    # otherwise (csa < csb, or the tie, which favors the lower id) a
+    # dominates b
     b_wins = F.col("csb") < F.col("csa")
     dominated = pairs.select(
         "cid",
@@ -598,10 +468,10 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN — the cluster-pruned scale path for top-k search.
 # Beyond-reference LLM-pipeline operator (SURVEY.md §2 similarity-search
-# family; complements lsh_topk the way IVF complements hyperplane LSH in
-# production vector stores): a deterministic k-means coarse quantizer
-# partitions the corpus into nlist cells, queries probe only the nprobe
-# nearest cells, and exact cosine runs on that slice alone.
+# family; complements the banded LSH near-dup pairs the way IVF complements
+# hyperplane LSH in production vector stores): a deterministic k-means
+# coarse quantizer partitions the corpus into nlist cells, queries probe
+# only the nprobe nearest cells, and exact cosine runs on that slice alone.
 
 
 def auto_nlist(n_rows: int, floor: int = 8, cap: int = 65_536) -> int:
@@ -626,8 +496,6 @@ def ivf_train_centroids(
     centroid table embeds identically in the Spark plan and any external
     oracle engine — cross-engine parity is by shared constants, not
     re-derivation."""
-    import numpy as np
-
     X = np.asarray(vectors, dtype=np.float64)
     n = len(X)
     nlist = max(1, min(nlist, n))
@@ -651,8 +519,6 @@ def _cell_distances(X, C):
     bit-exact parity between the live operator, the persisted index, the
     calibrators, and the generated DuckDB twin all ride on this exact
     arithmetic — a drifted copy would break them silently."""
-    import numpy as np
-
     X = np.asarray(X, dtype=np.float64)
     C = np.asarray(C, dtype=np.float64)
     return np.round(
@@ -690,8 +556,6 @@ def ivf_calibrate_nprobe(
     is reported, not hidden — on a weakly clustered corpus hitting 0.9
     recall can legitimately cost >50% of the corpus, and pretending
     otherwise would be a silent-cap anti-pattern."""
-    import numpy as np
-
     X = np.asarray(vectors, dtype=np.float64)
     n, nlist = len(X), len(centroids)
     k = min(k, n - 1)
@@ -700,7 +564,7 @@ def ivf_calibrate_nprobe(
     step = max(1, n // n_calibration)
     qidx = np.arange(0, n, step)[:n_calibration]
     # cell assignment + per-query probe order, same (distance, cid) rule as
-    # ivf_topk's kernels (stable argsort == lower-cid tie-break)
+    # _assign_cells / _probe_pairs (stable argsort == lower-cid tie-break)
     d = _cell_distances(X, centroids)
     assign = d.argmin(axis=1)
     probe_order = np.argsort(d[qidx], axis=1, kind="stable")
@@ -733,34 +597,39 @@ def ivf_calibrate_nprobe(
     return nprobe, float(recall_at[nprobe]), scan
 
 
+def _assign_cells(
+    df: DataFrame, centroids: list[list[float]], vec_col: str
+) -> DataFrame:
+    """df plus `cid int`, each row's nearest centroid under _cell_distances
+    (6dp-rounded L2, argmin → lowest cid on ties) — the one corpus-side
+    assignment kernel of ivf_topk, ivf_assign, ivf_build_index and
+    semantic_dedup. Rows whose vector does not match the centroid width
+    (null, empty, wrong length) get no cell and are dropped."""
+    dim = len(centroids[0])
+
+    def assign(batches):
+        for pdf in batches:
+            rows, X = _stack(pdf[vec_col].to_numpy(), dim)
+            yield pdf.iloc[rows].assign(
+                cid=_cell_distances(X, centroids).argmin(axis=1).astype("int32")
+            )
+
+    schema = StructType(df.schema.fields + [StructField("cid", IntegerType())])
+    return df.mapInPandas(assign, schema=schema)
+
+
 def ivf_assign(
     embeddings: DataFrame,
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, cid) cell assignment of a corpus under the matmul kernel's
-    exact rule (6dp-rounded L2, stable argmin → lowest cid) — the reusable
-    half of ivf_topk's corpus pass, also needed by exact calibration for
-    per-cell population counts."""
-    import numpy as np
-    import pandas as pd
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf):
-                X = np.stack(pdf[vec_col].to_numpy())
-                d = _cell_distances(X, centroids)
-                yield pd.DataFrame(
-                    {"id": pdf[id_col], "cid": d.argmin(axis=1).astype("int32")}
-                )
-            else:
-                yield pd.DataFrame({"id": pdf[id_col], "cid": pd.Series([], dtype="int32")})
-
-    id_t = dict(embeddings.dtypes)[id_col]
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"id {id_t}, cid int"
-    )
+    """(id, cid) cell assignment of a corpus under _assign_cells' rule —
+    the reusable half of ivf_topk's corpus pass, also needed by exact
+    calibration for per-cell population counts."""
+    return _assign_cells(
+        embeddings.select(F.col(id_col).alias("id"), vec_col), centroids, vec_col
+    ).select("id", "cid")
 
 
 def ivf_calibrate_nprobe_exact(
@@ -795,8 +664,6 @@ def ivf_calibrate_nprobe_exact(
     recall@nprobe. Deterministic throughout (hash-strided query choice,
     the kernels' 6dp/stable tie rules), so the result is a shareable
     literal like the centroid table."""
-    import numpy as np
-
     spark_n = n_rows if n_rows is not None else _estimated_rows(embeddings)
     step = max(1, spark_n // n_calibration)
     q = embeddings.filter(
@@ -857,18 +724,6 @@ def ivf_calibrate_nprobe_exact(
     )
 
 
-def _l2sq(a, b):
-    """Squared L2 distance as a sequential fold (same arithmetic order as
-    the DuckDB twin's list_reduce, so rounded values match exactly)."""
-    diff2 = F.zip_with(
-        a,
-        b,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-    return F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v)
-
-
 def _probe_pairs(
     queries: DataFrame,
     centroids: list[list[float]],
@@ -877,25 +732,24 @@ def _probe_pairs(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, qvec, cid) — each query expanded to its nprobe nearest
-    cells under the matmul kernel's exact rule (6dp-rounded L2, stable
-    argsort → lower cid on ties); pinned equal to the fold kernel by
-    test_ivf_kernels_agree."""
-    import numpy as np
-    import pandas as pd
+    cells under _assign_cells' rule (6dp-rounded L2, stable argsort →
+    lower cid on ties). A query without a cell has no probes."""
+    dim = len(centroids[0])
 
     def probe(batches):
         for pdf in batches:
-            rows = {"query_id": [], "qvec": [], "cid": []}
-            if len(pdf):
-                X = np.stack(pdf[vec_col].to_numpy())
-                d = _cell_distances(X, centroids)
-                order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-                for i in range(len(pdf)):
-                    for cc in order[i]:
-                        rows["query_id"].append(pdf[id_col].iat[i])
-                        rows["qvec"].append(pdf[vec_col].iat[i])
-                        rows["cid"].append(int(cc))
-            yield pd.DataFrame(rows)
+            vecs = pdf[vec_col].to_numpy()
+            rows, X = _stack(vecs, dim)
+            order = np.argsort(_cell_distances(X, centroids), axis=1, kind="stable")
+            order = order[:, :nprobe]
+            src = np.repeat(rows, order.shape[1])
+            yield pd.DataFrame(
+                {
+                    "query_id": pdf[id_col].to_numpy()[src],
+                    "qvec": vecs[src],
+                    "cid": order.ravel().astype("int32"),
+                }
+            )
 
     vec_t = dict(queries.dtypes)[vec_col]
     id_t = dict(queries.dtypes)[id_col]
@@ -922,25 +776,9 @@ def ivf_build_index(
     lets ivf_topk_indexed plan a probe scan WITHOUT listing the directory
     tree. Pay one corpus pass + one partitioned write per index build;
     every query after that reads nprobe/nlist of the data from disk
-    instead of scanning and re-assigning the corpus per query batch."""
-    import numpy as np
-    import pandas as pd
-
-    vec_t = dict(embeddings.dtypes)[vec_col]
-    id_t = dict(embeddings.dtypes)[id_col]
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf):
-                X = np.stack(pdf[vec_col].to_numpy())
-                d = _cell_distances(X, centroids)
-                yield pdf.assign(cid=d.argmin(axis=1).astype("int32"))
-            else:
-                yield pdf.assign(cid=pd.Series([], dtype="int32"))
-
-    assigned = embeddings.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} {id_t}, {vec_col} {vec_t}, cid int"
-    )
+    instead of scanning and re-assigning the corpus per query batch.
+    Rows without a cell (_assign_cells) are not indexed."""
+    assigned = _assign_cells(embeddings.select(id_col, vec_col), centroids, vec_col)
     return manager.commit(stage, assigned, partition_by=["cid"])
 
 
@@ -978,17 +816,11 @@ def ivf_topk_indexed(
         F.col(vec_col).alias("nvec"),
         "cid",
     )
-    scored = (
-        corpus.join(F.broadcast(q), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_expr(F.col("qvec"), F.col("nvec")), 6))
-        .select("query_id", "neighbor_id", "score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
+    return _score_topk(
+        corpus.join(F.broadcast(q), "cid").filter(
+            F.col("query_id") != F.col("neighbor_id")
+        ),
+        k,
     )
 
 
@@ -1000,132 +832,38 @@ def ivf_topk(
     vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 4,
-    kernel: str = "auto",
 ) -> DataFrame:
     """IVF approximate top-k: assign corpus rows to their nearest centroid
-    (one narrow map over a broadcast nlist x dim matrix — no shuffle),
-    expand each query to its nprobe nearest cells, then exact cosine + a
-    per-query top-k window over the probed slice only.
+    (_assign_cells: one narrow Arrow map with the nlist x dim centroid
+    matrix in the kernel closure — no shuffle), expand each query to its
+    nprobe nearest cells (_probe_pairs), then exact cosine + a per-query
+    top-k window over the probed slice only.
 
-    100-TB shape: the centroid matrix rides as a one-row broadcast
-    DataFrame (plane_matrix_frame — data, not plan literals) or inside the
-    Arrow UDF closure; the corpus pass is a single projection; in a
-    persisted deployment you write the assignment bucketed/partitioned BY
-    cid so a probe prunes partitions at the scan. Work per query is
-    nprobe/nlist of the corpus instead of all of it; with nlist ~ sqrt(n)
-    that is O(nprobe * sqrt(n)) per query. Ties deterministic everywhere:
-    assignment argmin breaks to the lowest cid, probe order (distance,
-    cid), rank order (score desc, neighbor_id) — all on 6dp-rounded
-    doubles so an external engine reproduces them bit-for-bit.
+    100-TB shape: the corpus pass is a single projection; in a persisted
+    deployment you write the assignment partitioned BY cid so a probe
+    prunes partitions at the scan (ivf_build_index / ivf_topk_indexed).
+    Work per query is nprobe/nlist of the corpus instead of all of it; with
+    nlist ~ sqrt(n) that is O(nprobe * sqrt(n)) per query. Ties
+    deterministic everywhere: assignment argmin breaks to the lowest cid,
+    probe order (distance, cid), rank order (score desc, neighbor_id) —
+    all on 6dp-rounded doubles so an external engine reproduces them.
 
-    kernel: 'fold' evaluates per-centroid sequential-fold expressions in
-    the JVM — arithmetic-order-identical to the DuckDB twin, but the
-    expression tree grows with nlist and falls off a cliff past ~10^2
-    centroids (nlist=800 at 640k rows did not finish in minutes).
-    'matmul' runs the assignment as an Arrow-batched mapInPandas numpy
-    kernel (||x||^2 + ||c||^2 - 2 X @ C.T per batch) — O(rows x nlist x
-    dim) BLAS instead of an O(nlist)-deep expression; numpy's pairwise
-    summation differs from the sequential fold at ~1e-15 relative, nine
-    orders below the 6dp rounding that feeds the argmin, and kernel
-    equality on real corpora is pinned by test. 'auto' = fold to 64
-    centroids (the oracle-compared family), matmul above."""
-    spark = embeddings.sparkSession
-    nlist = len(centroids)
-    if kernel == "auto":
-        kernel = "fold" if nlist <= 64 else "matmul"
-    if kernel == "matmul":
-        import numpy as np
-        import pandas as pd
-
-        def _dists(pdf: pd.DataFrame) -> "np.ndarray":
-            return _cell_distances(np.stack(pdf[vec_col].to_numpy()), centroids)
-
-        def assign(batches):
-            for pdf in batches:
-                if len(pdf):
-                    pdf = pdf.assign(cid=_dists(pdf).argmin(axis=1).astype("int32"))
-                else:
-                    pdf = pdf.assign(cid=pd.Series([], dtype="int32"))
-                yield pdf.rename(
-                    columns={id_col: "neighbor_id", vec_col: "nvec"}
-                )
-
-        def probe(batches):
-            for pdf in batches:
-                rows = {"query_id": [], "qvec": [], "cid": []}
-                if len(pdf):
-                    d = _dists(pdf)
-                    # stable argsort by rounded distance: among ties the
-                    # lower cid (= original index) wins, matching the fold
-                    # kernel's (d, cid) struct sort
-                    order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-                    for i in range(len(pdf)):
-                        for cc in order[i]:
-                            rows["query_id"].append(pdf[id_col].iat[i])
-                            rows["qvec"].append(pdf[vec_col].iat[i])
-                            rows["cid"].append(int(cc))
-                yield pd.DataFrame(rows)
-
-        vec_t = dict(embeddings.dtypes)[vec_col]
-        id_t = dict(embeddings.dtypes)[id_col]
-        c = embeddings.select(id_col, vec_col).mapInPandas(
-            assign,
-            schema=f"neighbor_id {id_t}, nvec {vec_t}, cid int",
-        )
-        q = queries.select(id_col, vec_col).mapInPandas(
-            probe, schema=f"query_id {id_t}, qvec {vec_t}, cid int"
-        )
-    else:
-        cf = plane_matrix_frame(spark, centroids).withColumnRenamed(
-            "__planes", "__cents"
-        )
-        c = (
-            embeddings.crossJoin(F.broadcast(cf))
-            .withColumn(
-                "__d",
-                F.transform(
-                    F.col("__cents"),
-                    lambda cc: F.round(_l2sq(F.col(vec_col), cc), 6),
-                ),
-            )
-            .select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("nvec"),
-                (F.array_position(F.col("__d"), F.array_min(F.col("__d"))) - 1)
-                .cast("int")
-                .alias("cid"),
-            )
-        )
-        idx = F.sequence(F.lit(0), F.lit(nlist - 1))
-        probe_structs = F.transform(
-            idx,
-            lambda i: F.struct(
-                F.round(
-                    _l2sq(F.col(vec_col), F.element_at(F.col("__cents"), i + 1)), 6
-                ).alias("d"),
-                i.cast("int").alias("cid"),
-            ),
-        )
-        q = (
-            queries.crossJoin(F.broadcast(cf))
-            .withColumn(
-                "__probe", F.slice(F.array_sort(probe_structs), 1, nprobe)
-            )
-            .select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("qvec"),
-                F.explode(F.col("__probe.cid")).alias("cid"),
-            )
-        )
-    scored = (
-        c.join(F.broadcast(q), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_expr(F.col("qvec"), F.col("nvec")), 6))
-        .select("query_id", "neighbor_id", "score")
+    The assignment distances are ||x||^2 + ||c||^2 - 2 X @ C.T
+    (_cell_distances), not the twin's sequential Σ(x−c)²; the two differ
+    at ~1e-15 relative, nine orders below the 6dp rounding that feeds the
+    argmin, and the rounded distances are equal cell for cell on the
+    sf0.01 and sf0.1 embedding tables."""
+    c = _assign_cells(
+        embeddings.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
+        ),
+        centroids,
+        "nvec",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
+    q = _probe_pairs(queries, centroids, nprobe, id_col, vec_col)
+    return _score_topk(
+        c.join(F.broadcast(q), "cid").filter(
+            F.col("query_id") != F.col("neighbor_id")
+        ),
+        k,
     )

@@ -1209,9 +1209,9 @@ def _ivf_centroids_for(sf_dir: str) -> list[list[float]]:
 
 def ann_ivf_topk(spark, sf_dir):
     """IVF ANN top-k — the cluster-pruned scale path next to the
-    brute-force baseline (ann_cosine_topk) and hyperplane LSH: k-means
-    cells, recall-calibrated nprobe-cell probes, exact cosine on the
-    probed slice only (every candidate is scored exactly, so the probe
+    brute-force baseline (ann_cosine_topk): k-means cells,
+    recall-calibrated nprobe-cell probes, exact cosine on the probed slice
+    only (every candidate is scored exactly, so the probe
     union IS the re-rank set). Approximation is part of the operator's
     spec, and the DuckDB twin replicates it exactly (same centroids, same
     nprobe, same tie rules), so the hash gate is exact; recall@5 ≥ 0.9 vs

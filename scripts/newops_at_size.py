@@ -3,10 +3,8 @@
 
 1. semantic_dedup at 640k vectors on the clustered corpus (the realistic
    embedding-table shape, same fixture as ivf_at_size): measures the
-   arrow (per-cell GEMM) kernel wall, the pairwise-work fraction
-   sum(|cell|^2)/n^2 actually scanned (the n^1.5 claim, measured), and the
-   arrow-vs-fold kernel speedup on a 40k slice (running fold at 640k is
-   exactly the interpreted-fold cost the arrow kernel exists to avoid).
+   operator wall and the pairwise-work fraction sum(|cell|^2)/n^2
+   actually scanned (the n^1.5 claim, measured).
 2. cross_doc_spans at SF=32 (1.6M driver-shaped docs, ~86M positional
    grams): wall time + docs/s for the full linear pipeline (digest
    shuffle -> document frequency -> flag-back join -> window union).
@@ -23,13 +21,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 RANDOM_DIR = "/tmp/robokop_driver/sf32.0"
-SLICE_ROWS = 40_000
 
 
 def semdedup_at_size(spark, sf_dir: str, threshold: float) -> dict:
     import numpy as np
     import pyarrow.dataset as ds
-    from pyspark.sql import functions as F
 
     from robokop_build_spark.operators import similarity as S
 
@@ -55,26 +51,8 @@ def semdedup_at_size(spark, sf_dir: str, threshold: float) -> dict:
     work_fraction = pair_work / (n * n)
 
     t0 = time.time()
-    n_drops = S.semantic_dedup(
-        emb, cents, threshold=threshold, pairwise="arrow"
-    ).count()
-    arrow_s = round(time.time() - t0, 2)
-
-    # kernel speedup on a slice small enough that fold finishes politely
-    sl = emb.filter(F.col("vec_id") < SLICE_ROWS)
-    sl_cents = S.ivf_train_centroids(X[:SLICE_ROWS], S.auto_nlist(SLICE_ROWS))
-    t0 = time.time()
-    a_rows = sorted(
-        map(tuple, S.semantic_dedup(sl, sl_cents, threshold=threshold,
-                                    pairwise="arrow").collect())
-    )
-    slice_arrow_s = round(time.time() - t0, 2)
-    t0 = time.time()
-    f_rows = sorted(
-        map(tuple, S.semantic_dedup(sl, sl_cents, threshold=threshold,
-                                    pairwise="fold").collect())
-    )
-    slice_fold_s = round(time.time() - t0, 2)
+    n_drops = S.semantic_dedup(emb, cents, threshold=threshold).count()
+    wall_s = round(time.time() - t0, 2)
 
     return {
         "op": "semantic_dedup",
@@ -86,13 +64,8 @@ def semdedup_at_size(spark, sf_dir: str, threshold: float) -> dict:
         "pairwise_work_fraction": round(work_fraction, 6),
         "pairs_scored": pair_work,
         "pairs_allpairs": n * n,
-        "arrow_s": arrow_s,
+        "wall_s": wall_s,
         "n_dropped": n_drops,
-        "slice_rows": SLICE_ROWS,
-        "slice_arrow_s": slice_arrow_s,
-        "slice_fold_s": slice_fold_s,
-        "slice_kernels_agree": a_rows == f_rows,
-        "slice_speedup": round(slice_fold_s / max(slice_arrow_s, 1e-9), 2),
     }
 
 

@@ -2,15 +2,21 @@
 """Drive the grading driver's contract end-to-end: run every queries() entry
 through Spark at sf0.01 and hash-compare against its oracle_sql() DuckDB twin
 (exactly the external driver's compare: sort columns, stringify, sort rows,
-md5). Usage:
+md5); --sf runs another scale factor's tables instead. Usage:
 
     python scripts/verify_contract.py              # all queries
     python scripts/verify_contract.py q1 dedup_exact   # just these
+    python scripts/verify_contract.py --sf DIR     # tables of another sf
+
+Spark runs on get_spark's default master: local[$SPARK_GRAFT_CPUS], else
+local[*].
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
+import os
 import sys
 import time
 
@@ -18,7 +24,6 @@ sys.path.insert(0, "/root/repo")
 
 import duckdb  # noqa: E402
 
-import __spark_entry__ as entrymod  # noqa: E402
 from robokop_build_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
@@ -37,13 +42,22 @@ def vhash(df):
 
 
 def main() -> int:
-    only = set(sys.argv[1:])
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    p = argparse.ArgumentParser(description="hash-compare queries() vs oracle_sql()")
+    p.add_argument("--sf", default=SF, help="directory of the input tables")
+    p.add_argument("only", nargs="*", help="query name prefixes (default: all)")
+    args = p.parse_args()
+    sf, only = args.sf, set(args.only)
+    # the twins that read their corpus (IVF centroids, MinHash width,
+    # fixture-backed oracles) resolve it at import from this variable
+    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf
+    import __spark_entry__ as entrymod
+
+    spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failed = []
@@ -52,7 +66,7 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF).toPandas()
+            sdf = fn(spark, sf).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark raised {e!r}")
             failed.append(name)

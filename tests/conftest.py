@@ -13,7 +13,8 @@ TEST_SF = 0.003  # 3,000 docs — big enough for every edge case, fast enough fo
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # master from get_spark: local[$SPARK_GRAFT_CPUS], else local[*]
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
 
 

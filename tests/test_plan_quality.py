@@ -109,23 +109,16 @@ def test_salted_join_spreads_hot_keys(spark):
 
 def test_publications_window_sorts_only_deduped_rows(spark):
     """The capped-top-k window must sit ABOVE a hash-distinct of (key, pub),
-    never directly over the raw event stream — the distinct's map-side
-    partial combine is what keeps 26.8M events (SF=1) from hitting the
-    window's sort exchange un-collapsed."""
-    from robokop_build_spark.operators.expand import aggregate_triples
+    never directly over the raw rows — the distinct's map-side partial
+    combine is what keeps repeated (key, pub) rows (the per-start doc sets
+    of aggregate_program_triples) from hitting the window's sort exchange
+    un-collapsed."""
+    from robokop_build_spark.operators.topk import capped_sorted_set
 
     raw = spark.createDataFrame(
-        [
-            ("s", "p", "o", "op", "RO:1", "lbl", f"d{i}", "s")
-            for i in range(10)
-        ],
-        [
-            "subj", "pred", "obj", "edge_source",
-            "orig_pred_id", "orig_pred_label", "doc_id", "start",
-        ],
+        [("s", f"DOC:d{i % 5}") for i in range(10)], ["rep", "pub"]
     )
-    origins = spark.createDataFrame([("s", ["s"])], ["rep", "origs"])
-    plan = _plan(aggregate_triples(raw, origins))
+    plan = _plan(capped_sorted_set(raw, ["rep"], "pub", 10_000, out="pubs"))
     win = plan.index("Window ")
     below_window = plan[win:]
     # a (partial-combined) distinct on the pub column feeds the window

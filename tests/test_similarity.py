@@ -4,7 +4,6 @@ import pytest
 from robokop_build_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_duplicates,
-    lsh_topk,
 )
 
 DIM = 16
@@ -50,10 +49,42 @@ def test_brute_force_matches_numpy(spark, emb_df, vecs):
         assert [n for _, n in sorted(got[q])] == want[q]
 
 
-def test_lsh_topk_high_recall_on_near_dup(spark, emb_df):
-    queries = emb_df.filter(emb_df.vec_id == 0)
-    got = [r["neighbor_id"] for r in lsh_topk(emb_df, queries, k=3, dim=DIM).collect()]
-    assert 1 in got  # the planted near-duplicate shares every hyperplane bucket
+def test_cosine_kernel_is_the_sequential_fold():
+    """The cosine kernel's dot and norms are bit-identical to the fold
+    0.0 + p0 + p1 + ... in double (the JVM aggregate / DuckDB list_reduce
+    order), including the +0.0 the fold leaves when every product is
+    -0.0; null, empty and length-mismatched pairs are NaN (null in Spark)."""
+    from functools import reduce
+
+    from robokop_build_spark.operators.similarity import _cosine_parts
+
+    rng = np.random.RandomState(3)
+    A = rng.randn(20, DIM).astype(np.float32)
+    B = rng.randn(20, DIM).astype(np.float32)
+    A[0], B[0] = 0.0, 0.0
+    A[0, ::2], B[0, 1::2] = -1.0, -1.0  # every product is -0.0
+
+    def objects(rows):
+        out = np.empty(len(rows), dtype=object)
+        for i, v in enumerate(rows):
+            out[i] = v
+        return out
+
+    def fold(x, y):
+        products = (float(p) * float(q) for p, q in zip(x, y))
+        return reduce(lambda acc, v: acc + v, products, 0.0)
+
+    dot, na, nb = _cosine_parts(objects(A), objects(B))
+    want = np.array([fold(a, b) for a, b in zip(A, B)])
+    assert dot.tobytes() == want.tobytes()
+    assert na.tobytes() == np.sqrt([fold(a, a) for a in A]).tobytes()
+    assert nb.tobytes() == np.sqrt([fold(b, b) for b in B]).tobytes()
+
+    bad = _cosine_parts(
+        objects([None, A[1], A[1][:0], A[1]]),
+        objects([A[2], None, A[2][:0], A[2][:-1]]),
+    )
+    assert np.isnan(bad).all()
 
 
 def test_embedding_near_duplicates(spark, emb_df):
@@ -106,15 +137,12 @@ def test_auto_signature_bits_tracks_corpus_size():
 
 def test_hyperplane_planes_not_inlined_in_plan(spark):
     """Production-dim config (768-d × 20 bits × 4 tables ≈ 61k plane floats)
-    must NOT appear as plan literals — the matrix rides in as a one-row
-    broadcast DataFrame (VERDICT r3 what's-wrong #3). Plan stays O(1)-sized
+    must NOT appear as plan literals — the matrix rides in the signature
+    kernel's closure (VERDICT r3 what's-wrong #3). Plan stays O(1)-sized
     and the query still executes."""
     import numpy as np
 
-    from robokop_build_spark.operators.similarity import (
-        embedding_near_duplicates,
-        lsh_topk,
-    )
+    from robokop_build_spark.operators.similarity import embedding_near_duplicates
 
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(60, 768))
@@ -133,11 +161,6 @@ def test_hyperplane_planes_not_inlined_in_plan(spark):
     pairs = {(r["id_a"], r["id_b"]) for r in nd.collect()}
     assert pairs  # planted near-copies surface
     assert all(b == a + 50 for a, b in pairs)
-
-    tk = lsh_topk(emb, emb.filter("vec_id < 3"), k=2, dim=768, n_bits=10)
-    plan2 = tk._jdf.queryExecution().executedPlan().toString()
-    assert len(plan2) < 100_000
-    assert tk.count() >= 0
 
 
 def test_ivf_centroid_training_is_deterministic(vecs):
@@ -209,19 +232,6 @@ def test_ivf_recall_gate_on_driver_corpus(spark, sf_dir):
         f"calibration_recall={cal_recall:.3f} scan_fraction={scan_frac:.3f}"
     )
     assert recall >= 0.9, f"recall {recall} (scan {scan_frac:.3f})"
-
-
-def test_ivf_kernels_agree(spark, emb_df, vecs):
-    """The Arrow matmul assignment kernel must produce exactly the fold
-    kernel's output (numpy pairwise summation differs at ~1e-15, nine
-    orders under the 6dp rounding that feeds every argmin/tie)."""
-    from robokop_build_spark.operators import similarity as S
-
-    cents = S.ivf_train_centroids(vecs, nlist=6)
-    queries = emb_df.filter(emb_df.vec_id < 8)
-    fold = S.ivf_topk(emb_df, queries, cents, k=4, nprobe=3, kernel="fold")
-    mm = S.ivf_topk(emb_df, queries, cents, k=4, nprobe=3, kernel="matmul")
-    assert sorted(map(tuple, fold.collect())) == sorted(map(tuple, mm.collect()))
 
 
 def test_ivf_exact_calibration_matches_independent_replay(spark):
@@ -320,25 +330,6 @@ def test_semantic_dedup_keeper_election(spark):
     assert out[4]["score"] == cos(4, 5)
 
 
-def test_semantic_dedup_kernels_agree(spark):
-    """The arrow (per-cell GEMM) kernel must produce row-identical output
-    to the fold (JVM, oracle-parity) kernel on the real fixture corpus."""
-    from robokop_build_spark.operators.similarity import semantic_dedup
-    from robokop_build_spark.plans.benchmark_queries import _ivf_centroids_for
-
-    sf = "/root/testdata/sf0.1"
-    cents = _ivf_centroids_for(sf)
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    fold = sorted(
-        map(tuple, semantic_dedup(emb, cents, threshold=0.4).collect())
-    )
-    arrow = sorted(
-        map(tuple, semantic_dedup(emb, cents, threshold=0.4, pairwise="arrow").collect())
-    )
-    assert len(fold) > 0
-    assert fold == arrow
-
-
 def test_semantic_dedup_hot_cell_guard(spark):
     """Adversarial all-one-cell corpus: every vector lands in cell 0, so the
     unguarded arrow path would run one n×n GEMM in a single task. With
@@ -360,10 +351,8 @@ def test_semantic_dedup_hot_cell_guard(spark):
         [(i, [float(x) for x in base[i]]) for i in range(n)],
         "vec_id bigint, embedding array<float>",
     )
-    guarded = semantic_dedup(
-        emb, cents, threshold=0.99, pairwise="arrow", max_cell_size=100
-    ).collect()
-    exact = semantic_dedup(emb, cents, threshold=0.99, pairwise="arrow").collect()
+    guarded = semantic_dedup(emb, cents, threshold=0.99, max_cell_size=100).collect()
+    exact = semantic_dedup(emb, cents, threshold=0.99).collect()
     assert len(exact) > 0
     exact_pairs = {(r["id"], r["dup_of"]) for r in exact}
     # guarded drops are a subset of the exact drops' id space and every
@@ -416,3 +405,52 @@ def test_ivf_param_cache_exact_flag(spark, tmp_path):
     _, nprobe2, _, _ = Q._ivf_params_for(d)
     assert nprobe2 == 7
     Q._ivf_params_for.cache_clear()
+
+
+DEGENERATE_ID = 999
+
+
+@pytest.mark.parametrize(
+    "bad_vec",
+    [None, [], [0.5] * (DIM - 1), [0.0] * DIM],
+    ids=["null", "empty", "wrong_length", "zero_norm"],
+)
+def test_degenerate_vector_never_scores_or_raises(spark, vecs, bad_vec):
+    """One null, empty, wrong-length or all-zero vector mixed into a
+    healthy corpus: every similarity operator completes, no output row
+    involving it carries a score, and the healthy rows are exactly those
+    of the corpus without it."""
+    from robokop_build_spark.operators import similarity as S
+
+    schema = "vec_id bigint, embedding array<float>"
+    healthy = [(int(i), [float(x) for x in vecs[i]]) for i in range(40)]
+    clean = spark.createDataFrame(healthy, schema)
+    dirty = spark.createDataFrame(healthy + [(DEGENERATE_ID, bad_vec)], schema)
+    cents = S.ivf_train_centroids(vecs[:40], nlist=4)
+    qids = [0, 5, 17, DEGENERATE_ID]
+
+    def run(op, emb):
+        queries = emb.filter(emb.vec_id.isin(qids))
+        if op == "brute_force_topk":
+            return S.brute_force_topk(emb, queries, k=3)
+        if op == "ivf_topk":
+            return S.ivf_topk(emb, queries, cents, k=3, nprobe=2)
+        if op == "embedding_near_duplicates":
+            return S.embedding_near_duplicates(
+                emb, threshold=0.95, dim=DIM, bits_per_table=8
+            )
+        return S.semantic_dedup(emb, cents, threshold=0.5)
+
+    for op in (
+        "brute_force_topk",
+        "ivf_topk",
+        "embedding_near_duplicates",
+        "semantic_dedup",
+    ):
+        want = sorted(map(tuple, run(op, clean).collect()))
+        assert want, op  # the healthy corpus gives the op something to return
+        got = [r.asDict() for r in run(op, dirty).collect()]
+        touched = [r for r in got if DEGENERATE_ID in r.values()]
+        assert all(r["score"] is None for r in touched), (op, touched)
+        rest = sorted(tuple(r.values()) for r in got if r not in touched)
+        assert rest == want, op
