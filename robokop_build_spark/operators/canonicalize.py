@@ -12,16 +12,18 @@ thing #1).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import time
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+# CC side gate, shared by canonical_map (normalization rows) and
+# connected_components (distinct edges): up to this many, one collect +
+# driver union-find; above it, the distributed large-star/small-star loop
+LOCAL_CC_MAX_EDGES = 2_000_000
+# salt buckets of resolve_aliases' shuffle side
+_NSALT = 8
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -86,28 +88,36 @@ def _local_union_find(rows) -> dict[str, str]:
     return rep_map
 
 
+def _min_present(a, b):
+    """min ignoring None, as Spark's min aggregate ignores nulls."""
+    return b if a is None else a if b is None else min(a, b)
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    strategy: str = "auto",
-    local_threshold: int = 2_000_000,
     stats: dict | None = None,
     manager=None,
     stage: str = "connected_components",
     commit_every: int = 0,
 ) -> DataFrame:
-    """Undirected CC → (curie, rep) with rep = min member of the component.
+    """Undirected CC → (curie, rep) with rep = min member of the component,
+    both typed like the input's `src` column; null endpoints are dropped.
 
-    Scale-adaptive: a dimension-sized edge list (the usual normalization
-    map) is solved with a driver union-find — the same judgment call as
+    Scale-adaptive on the measured count of distinct edges: up to
+    LOCAL_CC_MAX_EDGES (a dimension-sized edge list, the usual
+    normalization map) a driver union-find — the same judgment call as
     broadcasting a small join side; paying ~6 shuffle rounds of scheduler
-    latency per iteration for 10^4 edges is pure overhead. Above the
-    threshold, alternating large-star/small-star rounds (O(log n)
-    convergence), each localCheckpointed to cut lineage — the driver
-    fixpoint loop Catalyst cannot express (SURVEY.md §4 custom piece #2).
-    Both paths produce the identical deterministic min-member mapping.
+    latency per iteration for 10^4 edges is pure overhead. Above it,
+    alternating large-star/small-star rounds (O(log n) convergence), each
+    localCheckpointed to cut lineage — the driver fixpoint loop Catalyst
+    cannot express (SURVEY.md §4 custom piece #2). Both sides produce the
+    identical deterministic min-member mapping.
+
+    stats (distributed side only): iterations, iter_secs, iter_edges,
+    resumed_from.
 
     manager/stage/commit_every: optional durable loop checkpointing for
     the distributed path (operators/iterate.LoopCheckpointer) — the
@@ -133,32 +143,25 @@ def connected_components(
     )
     register_persisted(e)
     # one shared agg: the fingerprint's first component IS the row count,
-    # so durable mode decides the strategy from the same pass instead of a
+    # so durable mode picks its side from the same pass instead of a
     # second full count() job; non-durable mode pays count() only
     fp = (
         input_fingerprint(e, ["src", "dst"]) if manager is not None else None
     )
-    if strategy == "auto":
-        n_e = fp[0] if fp is not None else e.count()
-        strategy = "local" if n_e <= local_threshold else "distributed"
-    if strategy == "local":
+    n_e = fp[0] if fp is not None else e.count()
+    if n_e <= LOCAL_CC_MAX_EDGES:
         rep_map = _local_union_find(
             [(r["src"], r["dst"]) for r in e.collect()]
         )
-        return e.sparkSession.createDataFrame(
-            sorted(rep_map.items()), ["curie", "rep"]
-        )
-    params = (
-        {"op": "connected_components", "input": fp}
-        if manager is not None
-        else None
-    )
+        # typed from the input, not inferred (inference fails on no rows)
+        key = e.schema["src"].dataType
+        schema = StructType([StructField("curie", key), StructField("rep", key)])
+        return e.sparkSession.createDataFrame(sorted(rep_map.items()), schema)
+    params = None if fp is None else {"op": "connected_components", "input": fp}
     ckpt = LoopCheckpointer(manager, stage, commit_every, params=params)
     all_nodes = e.select(F.col("src").alias("curie")).union(
         e.select(F.col("dst").alias("curie"))
     ).distinct()
-
-    import time
 
     start = 0
     resumed = ckpt.resume()
@@ -173,7 +176,7 @@ def connected_components(
     for i in range(start, max_iter):
         t0 = time.time()
         cur = ckpt.save(i, _small_star(_large_star(cur)))
-        fp = _fingerprint(cur)
+        fp = input_fingerprint(cur, ["src", "dst"])
         iter_secs.append(round(time.time() - t0, 3))
         iter_edges.append(fp[0])
         if fp == prev_fp:
@@ -206,7 +209,6 @@ def connected_components(
 
 def canonical_map(
     normalization: DataFrame,
-    strategy: str = "auto",
     manager=None,
     cc_stage: str = "rep_map_cc",
     cc_commit_every: int = 0,
@@ -214,49 +216,49 @@ def canonical_map(
 ) -> DataFrame:
     """normalization(alias, canonical, node_type, name) →
     (curie, rep, node_type, name): every known curie mapped to its
-    deterministic representative, carrying component metadata (min name/type
-    for determinism; fixture components are metadata-consistent).
+    deterministic representative, carrying component metadata (per-field
+    min name/type, nulls ignored, for determinism; fixture components are
+    metadata-consistent). A row with a null alias or canonical adds no
+    edge. Column types follow the input.
 
-    strategy='local': single collect + driver union-find + one
-    createDataFrame — the normalization map is a dimension table, and the
-    distributed path costs ~6 scheduler round-trips per CC iteration that
-    dwarf the compute at this size. 'distributed' chains the large-star/
-    small-star CC with joins (the 10^12-alias path).
+    Up to LOCAL_CC_MAX_EDGES rows: one collect + driver union-find + one
+    createDataFrame — the map is a dimension table, and the distributed
+    loop's ~6 scheduler round-trips per CC iteration dwarf the compute at
+    this size. Above it: connected_components plus a metadata aggregate
+    (the 10^12-alias path).
 
     manager/cc_stage/cc_commit_every: durable loop checkpointing for the
     distributed CC (operators/iterate.LoopCheckpointer) — a preempted
     10^12-alias canonicalization resumes contraction from the last
-    committed round instead of round zero. The local path ignores them
+    committed round instead of round zero. The local side ignores them
     (its whole cost is one collect). Loop params (op + input fingerprint)
     are validated on resume, so stale state from a different normalization
     map raises instead of silently resuming."""
-    if strategy == "auto":
-        strategy = "local" if normalization.count() <= 2_000_000 else "distributed"
-    if strategy == "local":
+    if normalization.count() <= LOCAL_CC_MAX_EDGES:
         rows = normalization.select("alias", "canonical", "node_type", "name").collect()
-        rep_map = _local_union_find([(r["alias"], r["canonical"]) for r in rows])
+        rep_map = _local_union_find(
+            [(a, c) for a, c, _, _ in rows if a is not None and c is not None]
+        )
         # per-field min, independently, to match the distributed agg exactly
-        meta: dict[str, list[str]] = {}
-        for r in rows:
-            rep = rep_map[r["alias"]]
-            cur = meta.get(rep)
-            if cur is None:
-                meta[rep] = [r["node_type"], r["name"]]
-            else:
-                cur[0] = min(cur[0], r["node_type"])
-                cur[1] = min(cur[1], r["name"])
-        out = [
-            (curie, rep, meta[rep][0], meta[rep][1])
-            for curie, rep in sorted(rep_map.items())
-        ]
+        meta: dict[str, list] = {}
+        for alias, _, node_type, name in rows:
+            rep = rep_map.get(alias)
+            if rep is not None:
+                cur = meta.setdefault(rep, [None, None])
+                cur[0] = _min_present(cur[0], node_type)
+                cur[1] = _min_present(cur[1], name)
+        ins = normalization.schema
+        key = ins["alias"].dataType
+        schema = StructType(
+            [StructField("curie", key), StructField("rep", key), ins["node_type"], ins["name"]]
+        )
         return normalization.sparkSession.createDataFrame(
-            out, ["curie", "rep", "node_type", "name"]
+            [(curie, rep, *meta[rep]) for curie, rep in sorted(rep_map.items())], schema
         )
     reps = connected_components(
         normalization,
         src="alias",
         dst="canonical",
-        strategy="distributed",
         manager=manager if cc_commit_every > 0 else None,
         stage=cc_stage,
         commit_every=cc_commit_every,
@@ -272,31 +274,22 @@ def canonical_map(
 
 
 def _broadcast_budget_bytes(spark) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (-1 → disabled)."""
-    raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
-    mult = 1
-    low = raw.lower().strip()
-    # Spark accepts both '10m' and '10mb' (ditto k/g/t); parse all forms —
-    # a silent fallback here would mis-gate every auto-broadcast decision
-    for suf, m in (
-        ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30), ("tb", 1 << 40),
-        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40),
-        ("b", 1),
-    ):
-        if low.endswith(suf):
-            low = low[: -len(suf)]
-            mult = m
-            break
-    try:
-        return int(float(low) * mult)
-    except ValueError:
-        return 10 << 20
+    """The session's autoBroadcastJoinThreshold in bytes (-1 → disabled),
+    as the JVM's SQLConf parses it."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's sizeInBytes estimate for a DataFrame (file-size based for
     parquet-backed stages — exactly what the broadcast planner would see)."""
     return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Whether df's measured Catalyst size fits the session broadcast
+    budget — the one broadcast-or-shuffle test of this module."""
+    budget = _broadcast_budget_bytes(df.sparkSession)
+    return budget > 0 and _plan_size_bytes(df) <= budget
 
 
 def maybe_broadcast(df: DataFrame):
@@ -306,10 +299,7 @@ def maybe_broadcast(df: DataFrame):
     ENTITY graph (rep metadata, equivalent-identifier sets, authority
     labels): dimension-sized today, but at web scale they grow with the
     ontology (10^7-10^8 reps) and a hard hint would OOM the driver."""
-    budget = _broadcast_budget_bytes(df.sparkSession)
-    if budget > 0 and _plan_size_bytes(df) <= budget:
-        return F.broadcast(df)
-    return df
+    return F.broadcast(df) if _fits_broadcast(df) else df
 
 
 def resolve_aliases(
@@ -317,46 +307,40 @@ def resolve_aliases(
     rep_map: DataFrame,
     key: str,
     out: str = "rep",
-    strategy: str = "auto",
-    nsalt: int = 8,
-    salt_source: Column | None = None,
 ) -> DataFrame:
-    """Map fact[key] (a CURIE) to its canonical representative.
+    """Map fact[key] (a CURIE) to its canonical representative `out`; a key
+    absent from rep_map(curie, rep, ...) stands for itself. Every other
+    rep_map column rides along on the same join (null for absent keys), so
+    component metadata needs no second join.
 
-    strategy='auto' (default): measure the rep map's Catalyst size estimate
-    at plan time and broadcast while it fits the session's
-    autoBroadcastJoinThreshold, else fall back to the salted shuffle — at
-    100 TB the alias map can outgrow the broadcast budget mid-pipeline and a
-    hard-coded hint would either OOM the driver or silently shuffle-join
-    with hub-key skew.
-    strategy='broadcast': map-side join — the right call while the alias map
-    is dimension-sized (no shuffle, no skew possible).
-    strategy='salted': for when the map outgrows broadcast at 10^12-doc
-    scale — replicate the map ×nsalt and spread fact rows of the same hot key
-    (hub entity) across salt buckets, so no single shuffle partition owns a
-    hub (SURVEY.md §4 custom piece #1). AQE skew-join remains the backstop.
+    The join side follows the rep map's measured size: broadcast while its
+    Catalyst size estimate fits the session's autoBroadcastJoinThreshold
+    (no shuffle, no skew possible). Above it — at 100 TB the alias map can
+    outgrow the budget mid-pipeline, and a hard-coded hint would either OOM
+    the driver or shuffle-join with hub-key skew — a salted shuffle join:
+    the map is replicated ×_NSALT and fact rows of one hot key (hub entity)
+    are spread over the salt buckets by a hash of the whole row, so no
+    single shuffle partition owns a hub (SURVEY.md §4 custom piece #1). AQE
+    skew-join remains the backstop. A map with no size estimate (in-memory)
+    takes the salted side.
     """
-    if strategy == "auto":
-        budget = _broadcast_budget_bytes(fact.sparkSession)
-        strategy = (
-            "broadcast"
-            if budget > 0 and _plan_size_bytes(rep_map) <= budget
-            else "salted"
-        )
-    mapped = rep_map.select(F.col("curie").alias("__alias"), F.col("rep").alias(out))
-    if strategy == "broadcast":
+    mapped = rep_map.select(
+        F.col("curie").alias("__alias"),
+        F.col("rep").alias(out),
+        *[c for c in rep_map.columns if c not in ("curie", "rep")],
+    )
+    if _fits_broadcast(mapped):
         joined = fact.join(F.broadcast(mapped), fact[key] == F.col("__alias"), "left")
-    elif strategy == "salted":
+    else:
         salted_map = mapped.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(nsalt - 1)))
+            "__salt", F.explode(F.sequence(F.lit(0), F.lit(_NSALT - 1)))
         )
-        src = salt_source if salt_source is not None else F.xxhash64(*fact.columns)
-        fact_s = fact.withColumn("__salt", F.pmod(src, F.lit(nsalt)).cast("int"))
+        fact_s = fact.withColumn(
+            "__salt", F.pmod(F.xxhash64(*fact.columns), F.lit(_NSALT)).cast("int")
+        )
         joined = fact_s.join(
             salted_map,
             (fact_s[key] == F.col("__alias")) & (fact_s["__salt"] == salted_map["__salt"]),
             "left",
         ).drop("__salt")
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
     return joined.withColumn(out, F.coalesce(F.col(out), fact[key])).drop("__alias")

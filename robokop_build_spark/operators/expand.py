@@ -36,8 +36,9 @@ def upcast(df: DataFrame, parent_type: str) -> DataFrame:
 
 def canonicalize_predicate_map(pm: DataFrame, rep_map: DataFrame) -> DataFrame:
     """Re-key concrete edges into representative space (both endpoints)."""
-    pm2 = resolve_aliases(pm, rep_map, "subj_curie", out="subj_rep")
-    pm2 = resolve_aliases(pm2, rep_map, "obj_curie", out="obj_rep")
+    reps = rep_map.select("curie", "rep")
+    pm2 = resolve_aliases(pm, reps, "subj_curie", out="subj_rep")
+    pm2 = resolve_aliases(pm2, reps, "obj_curie", out="obj_rep")
     return pm2.select(
         "src_type",
         "dst_type",

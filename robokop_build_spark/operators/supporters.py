@@ -45,7 +45,9 @@ class OmnicorpSupporter:
     ) -> DataFrame:
         from ..operators.canonicalize import resolve_aliases
 
-        tp_rep = resolve_aliases(tables["term_pmids"], rep_map, "curie", out="rep")
+        tp_rep = resolve_aliases(
+            tables["term_pmids"], rep_map.select("curie", "rep"), "curie"
+        )
         return shared_pmid_support(
             graph_nodes, tp_rep.select("rep", "pmid"), publication_cap, ctime,
             pairs=pairs,

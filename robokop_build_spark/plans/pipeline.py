@@ -16,7 +16,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import canonical_map, maybe_broadcast, resolve_aliases
+from ..operators.canonicalize import canonical_map, resolve_aliases
 from ..operators.expand import (
     aggregate_program_triples,
     canonicalize_predicate_map,
@@ -37,7 +37,7 @@ DGX_PATH = ["disease", "gene", "genetic_condition"]
 
 def _parquet_rows_hint(fixture_dir: str) -> int | None:
     """Corpus size from parquet footers (metadata-only, no Spark job) —
-    drives the intermediates=auto materialization choice."""
+    decides how stage intermediates are materialized."""
     import glob as _glob
 
     try:
@@ -72,13 +72,6 @@ class PipelineConfig:
     # emit only edges on paths matching the FULL pattern (cypher semantics);
     # default False preserves emit-per-hop (every reachable edge kept)
     require_complete: bool = False
-    # explicit repartition width after scan: at cluster scale set to
-    # O(input bytes / 128MB); on local[N] a small multiple of cores
-    doc_partitions: int | None = None
-    # 'auto' picks broadcast vs salted from the rep map's measured Catalyst
-    # size vs the session broadcast budget at plan time (canonicalize.py)
-    norm_join_strategy: str = "auto"
-    nsalt: int = 8
     with_support: bool = True
     # supporter modules to run (reference -s flag, builder/builder.py:320-362);
     # with_support=False disables all
@@ -96,27 +89,14 @@ class PipelineConfig:
     # builder/builder.py:314-317); empty by default because this engine's
     # min-CURIE canonical rep legitimately surfaces alias prefixes
     forbidden_id_prefixes: tuple[str, ...] = ()
-    cc_strategy: str = "auto"  # 'local' dim-sized / 'distributed' web-scale
     # durable commit cadence for the distributed-CC loop inside rep_map
-    # (operators/iterate.LoopCheckpointer): 'auto' = every 5 rounds, the
-    # measured 2.8-5.0%-overhead cadence (BENCH §0h) — a preempted
-    # canonicalization then resumes from the last committed round instead
-    # of round zero. Only the distributed CC path engages it; the local
-    # union-find (every corpus below ~2M aliases) has no loop to protect.
-    # 0 disables (localCheckpoint-only rounds, the pre-round-7 behavior).
-    cc_commit_every: int | str = "auto"
-    # intermediate materialization for doc_entities/triples_base/metrics:
-    # 'local' = eager localCheckpoint (no parquet round-trip),
-    # 'commit' = durable stage commit (the pre-round-5 layout),
-    # 'auto' (default) = local below ~2M docs, commit above. Measured
-    # (interleaved A/B, 4 executor JVMs x 2 cores, fresh process per run):
-    # at 8M docs commit wins decisively — 179/234s vs 283/322s — because
-    # doc-scale localCheckpoint blocks live DESERIALIZED in executor heaps
-    # (GC-heavy, single-replica fetches) while the parquet round-trip is
-    # compressed, columnar-pruned on re-read, and lands on fast local
-    # storage; at <=1M docs the two are statistically equal and local
-    # avoids the commit floor. Env override: SPARK_GRAFT_INTERMEDIATES.
-    intermediates: str = "auto"
+    # (operators/iterate.LoopCheckpointer): every 5 rounds, the measured
+    # 2.8-5.0%-overhead cadence (BENCH §0h) — a preempted canonicalization
+    # then resumes from the last committed round instead of round zero.
+    # Only the distributed CC side engages it; the local union-find (every
+    # corpus below ~2M aliases) has no loop to protect. 0 disables
+    # (localCheckpoint-only rounds, the pre-round-7 behavior).
+    cc_commit_every: int = 5
 
     def query_key(self, programs: list[list[str]]) -> str:
         """Stage-name suffix for query-dependent stages, so one workdir
@@ -171,19 +151,13 @@ class KGPipeline:
         t = read_fixtures(spark, cfg.fixture_dir)
 
         docs = t["documents"]
-        if cfg.doc_partitions:
-            # bound shuffle width / even out input splits (north_rule:
-            # explicit repartition by doc_id hash)
-            docs = docs.repartition(cfg.doc_partitions, "doc_id")
-        else:
-            # under-split input (few files / giant row groups) would pin the
-            # most expensive stage (mention detection) to a handful of
-            # tasks; one doc_id-hash shuffle buys full-width parallelism.
-            # At cluster scale the input is thousands of files and this
-            # branch never triggers.
-            par = spark.sparkContext.defaultParallelism
-            if docs.rdd.getNumPartitions() < par:
-                docs = docs.repartition(par * 2, "doc_id")
+        # under-split input (few files / giant row groups) would pin the
+        # most expensive stage (mention detection) to a handful of tasks;
+        # one doc_id-hash shuffle buys full-width parallelism. At cluster
+        # scale the input is thousands of files and this never triggers.
+        par = spark.sparkContext.defaultParallelism
+        if docs.rdd.getNumPartitions() < par:
+            docs = docs.repartition(par * 2, "doc_id")
 
         mentions = ckpt.run_stage(
             "mentions",
@@ -192,7 +166,6 @@ class KGPipeline:
             ),
         )
 
-        cc_every = 5 if cfg.cc_commit_every == "auto" else int(cfg.cc_commit_every)
         # surfaced for tests/operators-report: resumed_from/iterations of
         # the CC loop when the distributed path ran durably this run
         self.cc_stats: dict = {}
@@ -200,40 +173,28 @@ class KGPipeline:
             "rep_map",
             lambda: canonical_map(
                 t["normalization"],
-                cfg.cc_strategy,
                 manager=ckpt,
                 cc_stage="rep_map_cc",
-                cc_commit_every=cc_every,
+                cc_commit_every=cfg.cc_commit_every,
                 stats=self.cc_stats,
             ),
         )
 
         def _doc_entities() -> DataFrame:
+            # node_type of the canonical component (not the raw candidate)
+            # wins, as in reference synonymization; the curie's rep-map row
+            # holds it, so it rides the one alias join as rep_type
             resolved = resolve_aliases(
                 mentions,
-                rep_map,
+                rep_map.select("curie", "rep", F.col("node_type").alias("rep_type")),
                 "curie",
-                out="rep",
-                strategy=cfg.norm_join_strategy,
-                nsalt=cfg.nsalt,
-                salt_source=F.xxhash64("doc_id"),
             )
-            # node_type of the canonical component (not the raw candidate):
-            # the component's metadata wins, as in reference synonymization
-            meta = rep_map.select("rep", F.col("node_type").alias("rep_type")).distinct()
-            return (
-                # rep-level metadata is entity-scale at web size: broadcast
-                # only while it fits the session budget (same policy as the
-                # alias-resolution join above it)
-                resolved.join(maybe_broadcast(meta), "rep", "left")
-                .select(
-                    "doc_id",
-                    "rep",
-                    F.coalesce("rep_type", "node_type").alias("node_type"),
-                    F.col("curie").alias("orig"),
-                )
-                .distinct()
-            )
+            return resolved.select(
+                "doc_id",
+                "rep",
+                F.coalesce("rep_type", "node_type").alias("node_type"),
+                F.col("curie").alias("orig"),
+            ).distinct()
 
         # NOT a commit point: doc_entities is re-derivable in one narrow
         # join from the two committed frontier stages above it, so paying a
@@ -246,14 +207,15 @@ class KGPipeline:
         # optimization + codegen time past what the skipped commits saved).
         # Durability is unaffected: on executor loss past the block's
         # lifetime the job restarts from the committed frontier.
-        inter = os.environ.get("SPARK_GRAFT_INTERMEDIATES", cfg.intermediates)
-        if inter == "auto":
-            inter = (
-                "commit"
-                if (_parquet_rows_hint(cfg.fixture_dir) or 0) >= 2_000_000
-                else "local"
-            )
-        if inter == "commit":
+        # From ~2M docs up (parquet footers), these intermediates are durable
+        # stage commits instead: at 8M docs commit measured 179/234s vs
+        # 283/322s local (interleaved A/B, 4 executor JVMs x 2 cores) —
+        # doc-scale localCheckpoint blocks live DESERIALIZED in executor
+        # heaps (GC-heavy, single-replica fetches) while parquet is
+        # compressed and column-pruned on re-read; at <=1M docs the two are
+        # statistically equal and local avoids the commit floor.
+        commit = (_parquet_rows_hint(cfg.fixture_dir) or 0) >= 2_000_000
+        if commit:
             doc_entities = ckpt.run_stage("doc_entities", _doc_entities)
         else:
             doc_entities = _doc_entities().localCheckpoint(eager=True)
@@ -301,7 +263,7 @@ class KGPipeline:
         # unions them back, so without materialization the expand DAG would
         # run twice — but durability belongs to the triples{qk} frontier
         # commit just below; a second parquet round-trip here was pure floor
-        if inter == "commit":
+        if commit:
             triples_base = ckpt.run_stage(f"triples_base{qk}", _triples_base)
         else:
             triples_base = _triples_base().localCheckpoint(eager=True)
@@ -389,7 +351,7 @@ class KGPipeline:
         # lazy, uncommitted: a dimension-sized rollup over tables that are
         # either committed (mentions/triples/nodes) or persisted — computed
         # only when a consumer actually collects it
-        if inter == "commit":
+        if commit:
             metrics = ckpt.run_stage(f"metrics{qk}", _metrics)
         else:
             metrics = _metrics()

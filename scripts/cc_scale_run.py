@@ -10,6 +10,10 @@ at two parallelism levels, and reports:
 - determinism across the two parallelism levels (full-output hash equality),
 - wall at both levels.
 
+connected_components picks its side from the measured edge count; the
+distributed side fills stats["iterations"], so a run below the gate (no
+iterations) exits non-zero instead of reporting the driver union-find.
+
 Usage: python scripts/cc_scale_run.py [n_nodes] [cores_small] [cores_big]
 Defaults: 4,000,000 nodes (~4.57M edges), local[8] vs local[32].
 
@@ -41,7 +45,7 @@ edges = synonym_graph(spark, n_nodes, block=64, hub_stride=50)
 n_edges = edges.count()
 stats = {{}}
 t0 = time.time()
-reps = connected_components(edges, strategy="distributed", stats=stats)
+reps = connected_components(edges, stats=stats)
 reps = reps.persist()
 n_rows = reps.count()
 wall = round(time.time() - t0, 2)
@@ -65,7 +69,13 @@ def run(n_nodes: int, cores: int) -> dict:
     )
     for line in out.stdout.splitlines():
         if line.startswith("CCRESULT "):
-            return json.loads(line[len("CCRESULT "):])
+            res = json.loads(line[len("CCRESULT "):])
+            if not res["iterations"]:
+                sys.exit(
+                    f"{res['n_edges']} edges took the local union-find, not the "
+                    "distributed side; raise n_nodes above the CC gate"
+                )
+            return res
     raise RuntimeError(f"child failed:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
 
 

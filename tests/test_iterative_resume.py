@@ -99,24 +99,26 @@ def test_core_number_kill_mid_propagation_resumes_and_matches(spark, tmp_path):
 
 
 def test_connected_components_kill_mid_contraction_resumes_and_matches(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
-    # two chains -> two components; force the distributed star path
+    from robokop_build_spark.operators import canonicalize
+
+    # two chains -> two components; force the distributed star path by
+    # lowering the measured-size gate below the input
     edges = [(f"x{i}", f"x{i + 1}") for i in range(9)] + [
         (f"y{i}", f"y{i + 1}") for i in range(7)
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    want = _rows(connected_components(df, strategy="distributed"))
+    monkeypatch.setattr(canonicalize, "LOCAL_CC_MAX_EDGES", -1)
+    want = _rows(connected_components(df))
     mgr = CheckpointManager(spark, str(tmp_path))
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(
-            df, strategy="distributed", max_iter=1, manager=mgr,
-            stage="cc", commit_every=1,
+            df, max_iter=1, manager=mgr, stage="cc", commit_every=1,
         )
     stats: dict = {}
     got = connected_components(
-        df, strategy="distributed", manager=mgr, stage="cc",
-        commit_every=1, stats=stats,
+        df, manager=mgr, stage="cc", commit_every=1, stats=stats,
     )
     assert stats["resumed_from"] == 1
     assert _rows(got) == want
@@ -187,7 +189,7 @@ def _triple_keys(out):
 
 
 def test_pipeline_resumes_mid_cc_with_identical_output(
-    spark, fixture_dir, tmp_path
+    spark, fixture_dir, tmp_path, monkeypatch
 ):
     """Round-6 verdict #7: the KG pipeline's rep_map CC loop is durably
     resumable at the PIPELINE level, not just the operator level. Simulate
@@ -197,13 +199,16 @@ def test_pipeline_resumes_mid_cc_with_identical_output(
     run the full pipeline against that workdir and assert it RESUMED the
     loop (resumed_from >= 1) and emitted triples identical to an
     uninterrupted run."""
+    from robokop_build_spark.operators import canonicalize
     from robokop_build_spark.plans import pipeline as P
     from robokop_build_spark.sources.readers import read_fixtures
 
+    # the fixture map is far below the CC gate; lower it so rep_map takes
+    # the distributed side
+    monkeypatch.setattr(canonicalize, "LOCAL_CC_MAX_EDGES", -1)
     want = _triple_keys(
         P.run_pipeline(
-            spark, fixture_dir, str(tmp_path / "w1"),
-            cc_strategy="distributed", cc_commit_every=1,
+            spark, fixture_dir, str(tmp_path / "w1"), cc_commit_every=1
         )
     )
 
@@ -215,16 +220,14 @@ def test_pipeline_resumes_mid_cc_with_identical_output(
     # exactly a preemption one round into contraction
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(
-            norm, src="alias", dst="canonical", strategy="distributed",
+            norm, src="alias", dst="canonical",
             max_iter=1, manager=mgr, stage="rep_map_cc", commit_every=1,
         )
     assert mgr.current_meta("rep_map_cc")["iteration"] == 0
 
     pipe = P.KGPipeline(
         spark,
-        P.PipelineConfig(
-            fixture_dir, w2, cc_strategy="distributed", cc_commit_every=1
-        ),
+        P.PipelineConfig(fixture_dir, w2, cc_commit_every=1),
     )
     got = _triple_keys(pipe.run())
     assert pipe.cc_stats.get("resumed_from") == 1

@@ -46,13 +46,11 @@ def test_alias_resolution_broadcasts(spark, tmp_path):
     fact = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).select(
         F.col("source").alias("curie")
     )
-    plan = _plan(resolve_aliases(fact, rep_map, "curie", strategy="broadcast"))
-    assert "BroadcastHashJoin" in plan
 
-    # 'auto' (the pipeline default) broadcasts a parquet-backed map whose
-    # measured size fits the budget — but goes salted for an in-memory map
-    # with no size estimate (conservative: never broadcast what you can't
-    # size; Catalyst's default estimate for ExistingRDD is 'huge')
+    # a parquet-backed map whose measured size fits the budget broadcasts —
+    # but an in-memory map with no size estimate goes salted
+    # (conservative: never broadcast what you can't size; Catalyst's
+    # default estimate for ExistingRDD is 'huge')
     rep_map.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "rm"))
     plan_auto = _plan(
         resolve_aliases(fact, spark.read.parquet(str(tmp_path / "rm")), "curie")
@@ -87,21 +85,20 @@ def test_text_ops_python_boundary_is_arrow_only(spark):
 
 
 def test_salted_join_spreads_hot_keys(spark):
-    """The salted variant joins on (alias, salt): same hot alias lands in
-    nsalt different buckets."""
+    """The salted side joins on (alias, salt): same hot alias lands in
+    different buckets (an in-memory map has no size estimate, so it takes
+    the salted side)."""
     from robokop_build_spark.operators.canonicalize import resolve_aliases
 
     rep_map = spark.createDataFrame([("hub", "R")], ["curie", "rep"])
     fact = spark.createDataFrame(
         [(f"d{i}", "hub") for i in range(64)], ["doc_id", "curie"]
     )
-    out = resolve_aliases(
-        fact, rep_map, "curie", strategy="salted", nsalt=8,
-        salt_source=F.xxhash64("doc_id"),
-    )
+    out = resolve_aliases(fact, rep_map, "curie")
+    assert "__salt" in _plan(out)
     assert all(r["rep"] == "R" for r in out.collect())
     salts = (
-        fact.withColumn("s", F.pmod(F.xxhash64("doc_id"), F.lit(8)))
+        fact.withColumn("s", F.pmod(F.xxhash64(*fact.columns), F.lit(8)))
         .select("s").distinct().count()
     )
     assert salts >= 6  # hot key actually spread across buckets
